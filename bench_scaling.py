@@ -6,7 +6,7 @@ identical input at two local parallelism levels — local[8] and local[32]
 — in separate JVMs (subprocess per level, cold session each), and report
 docs/sec at both plus scaling efficiency = T_N / (4 · T_4N).
 
-Writes BENCH/BASELINE.md. Usage: python bench_scaling.py [n_docs]
+Writes BENCH/BASELINE.md. Usage: python bench_scaling.py [n_docs] [N] [4N]
 """
 
 from __future__ import annotations
@@ -68,9 +68,15 @@ def run_level(cpus: int, docs_path: str, admins_path: str) -> dict:
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_400_000
-    n_level = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    xn_level = int(sys.argv[3]) if len(sys.argv) > 3 else 4 * n_level
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n_docs", type=int, nargs="?", default=2_400_000)
+    ap.add_argument("n_level", type=int, nargs="?", default=8, help="N cores")
+    ap.add_argument("xn_level", type=int, nargs="?", default=None, help="4N cores (default 4*N)")
+    args = ap.parse_args()
+    n_docs, n_level = args.n_docs, args.n_level
+    xn_level = args.xn_level or 4 * n_level
     # reuse bench corpus machinery at a dedicated size
     from mimirsbrunn_spark.session import get_spark
     from bench import ensure_corpus

@@ -26,8 +26,7 @@ exactly those shapes:
 
 The DuckDB oracle is fully independent of the engine: the even-odd ray
 cast is transposed edge-wise (the IDENTICAL IEEE operation sequence as
-``geometry.points_in_ring`` / ``edge_polys_inside_sql``, so crossings
-agree bit-for-bit) and the candidate fold of ``geofinder.get`` is
+``geometry.points_in_ring``, so crossings agree bit-for-bit) and the candidate fold of ``geofinder.get`` is
 replayed as a recursive CTE over candidates ordered by (zone_rank, id).
 The parent walk collapses to a precomputed ancestor closure — the
 walk's early-break only skips ids/types that an earlier walk already

@@ -310,54 +310,6 @@ def points_near_mp_boundary(lon: np.ndarray, lat: np.ndarray, mp: MultiPolygon, 
     return out
 
 
-EDGE_POLYS_TYPE = "array<array<array<struct<x1:double,y1:double,x2:double,y2:double>>>>"
-
-
-def mp_to_edge_polys(mp: MultiPolygon) -> list:
-    """Nested closed-edge form of a multipolygon for the pure-Catalyst
-    containment expression (operators/pip.py refine="jvm"):
-    polys → rings → [(x1,y1,x2,y2), ...] including the closing edge,
-    mirroring points_in_ring's np.roll edge enumeration exactly."""
-    out = []
-    for poly in mp:
-        rings = []
-        for ring in poly:
-            r = np.asarray(ring, dtype=np.float64)
-            nxt = np.roll(r, -1, axis=0)
-            rings.append(
-                [
-                    {"x1": float(a[0]), "y1": float(a[1]), "x2": float(b[0]), "y2": float(b[1])}
-                    for a, b in zip(r, nxt)
-                ]
-            )
-        out.append(rings)
-    return out
-
-
-def edge_polys_inside_sql(polys_col: str, px: str, py: str) -> str:
-    """SQL predicate: point (px, py) inside the EDGE_POLYS_TYPE column —
-    the exact structure of points_in_multipolygon (per-ring even-odd ray
-    cast, holes subtracted, polygons OR'd) as nested higher-order
-    functions, so the partitioned PIP refine can run entirely JVM-side.
-    Float parity: the crossing test is written with the identical IEEE
-    operation sequence as points_in_ring (straddle on (y1 <= py) !=
-    (y2 <= py); xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)), so JVM
-    and numpy agree bit-for-bit. Division by zero cannot fire inside a
-    straddling edge (straddle implies y1 != y2)."""
-
-    def crossing(e: str) -> str:
-        return (
-            f"CASE WHEN (({e}.y1 <= {py}) != ({e}.y2 <= {py})) AND "
-            f"({px} < {e}.x1 + ({py} - {e}.y1) * ({e}.x2 - {e}.x1) / ({e}.y2 - {e}.y1)) "
-            "THEN 1 ELSE 0 END"
-        )
-
-    ring_par = f"(aggregate(r, 0, (acc, e) -> acc + {crossing('e')}) % 2) = 1"
-    ext_par = f"(aggregate(p[0], 0, (acc, e) -> acc + {crossing('e')}) % 2) = 1"
-    poly_inside = f"({ext_par}) AND NOT exists(slice(p, 2, size(p) - 1), r -> {ring_par})"
-    return f"exists({polys_col}, p -> {poly_inside})"
-
-
 def haversine_np(
     lon1: np.ndarray, lat1: np.ndarray, lon2: np.ndarray, lat2: np.ndarray
 ) -> np.ndarray:

@@ -326,12 +326,24 @@ def ngram_jaccard_pairs(
     )
 
 
+def eager_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and cut its lineage. With a checkpoint dir set
+    on the session → ``DataFrame.checkpoint`` there (survives executor
+    loss — the right choice on a real cluster with dynamic allocation /
+    spot kills, where a non-replicated localCheckpoint block lost
+    mid-job fails the whole job); without one → ``localCheckpoint``
+    (executor-memory/disk blocks, no HDFS round trip). The one
+    checkpoint rule for every operator that cuts lineage mid-plan."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def neardup_components(
     pairs: DataFrame,
     doc_a: str = "doc_a",
     doc_b: str = "doc_b",
     max_iter: int = 25,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Near-dup pair graph → connected components: (doc_id, component),
     component = the minimum doc id reachable through the pair graph —
@@ -344,15 +356,9 @@ def neardup_components(
     so this converges in a handful of shuffles; ``max_iter`` is a
     pathological-chain guard (raises rather than silently truncating).
 
-    Each round's labels are checkpointed to cut the otherwise
-    iteration-deep lineage. ``reliable`` picks the checkpoint flavor:
-    ``True`` → ``DataFrame.checkpoint`` to the session's checkpoint dir
-    (survives executor loss — the right choice on a real cluster with
-    dynamic allocation / spot kills, where a non-replicated
-    localCheckpoint block lost mid-loop fails the whole job); ``False``
-    → ``localCheckpoint`` (executor-memory/disk blocks, no HDFS round
-    trip); ``None`` (default) → reliable iff the session has a
-    checkpoint dir configured. Superseded generations are NOT freed by
+    Each round's labels are checkpointed (``eager_checkpoint``: reliable
+    iff the session has a checkpoint dir) to cut the otherwise
+    iteration-deep lineage. Superseded generations are NOT freed by
     ``unpersist()`` (checkpoint blocks are owned by the RDD, released on
     JVM GC / by the context cleaner) — the table is a narrow
     (doc_id, component) projection over only the PAIRED docs, so a few
@@ -411,8 +417,6 @@ def neardup_components(
         )
         edges.unpersist()
         return labels_df
-    if reliable is None:
-        reliable = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -438,10 +442,7 @@ def neardup_components(
         # eager checkpoint: fully materializes THIS generation and cuts
         # lineage — a lazy cache probed via limit(1) only partially
         # materializes, so later rounds re-derive the whole label chain
-        if reliable:
-            new_flagged = new_flagged.checkpoint(eager=True)
-        else:
-            new_flagged = new_flagged.localCheckpoint(eager=True)
+        new_flagged = eager_checkpoint(new_flagged)
         changed = new_flagged.filter(F.col("__changed")).limit(1).count()
         labels = new_flagged.drop("__changed")
         if changed == 0:

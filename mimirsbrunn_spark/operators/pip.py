@@ -19,16 +19,14 @@ once and executors build the finder from the file (stage_admin_dim).
 **partitioned strategy** (polygon side too big to broadcast): a
 three-stage shuffle plan — (1) points equi-join a slim
 (cell, admin-idx, bbox) cover with the envelope check inside the
-Catalyst join; (2) exact refine, either the (admin, salt) cogroup with
-the vectorized numpy ray cast (default — WKB crosses the wire exactly
-``n_salts`` times, a giant polygon's candidates spread across reducers)
-or a pure-Catalyst higher-order-function predicate over closed-edge
-arrays (``refine="jvm"``); (3) int-encoded flags gather per point
-(map-side partial collect_list), the dedup/memo loop replays against
-the broadcast admin *skeleton* (id, zone_type, parent_id — no
-boundary; exact because memoization in the reference only
-short-circuits boundary tests), and the narrow result joins back to
-the points. Carry-the-payload-through-the-gather variants were
+Catalyst join; (2) exact refine, the (admin, salt) cogroup with the
+vectorized numpy ray cast (WKB crosses the wire exactly ``N_SALTS``
+times, a giant polygon's candidates spread across reducers); (3)
+int-encoded flags gather per point (map-side partial collect_list),
+the dedup/memo loop replays against the broadcast admin *skeleton*
+(id, zone_type, parent_id — no boundary; exact because memoization in
+the reference only short-circuits boundary tests), and the narrow
+result joins back to the points. Carry-the-payload-through-the-gather variants were
 measured slower in r3 (see BENCH/BASELINE.md).
 
 Output: input point columns + ``admin_ids array<string>`` in the
@@ -58,6 +56,10 @@ ADMIN_DIM_COLS = ["id", "zone_type", "parent_id", "boundary_wkb"]
 # it for ANY tolerance; they only trade classify cost vs band size.
 AUTO_SIMPLIFY_MIN_VERTICES = 512
 AUTO_SIMPLIFY_EDGE_FACTOR = 5.0
+
+# partitioned refine: each admin's WKB is replicated this many times and
+# its candidate pairs spread over the copies by a uid-hash salt
+N_SALTS = 8
 
 
 def _auto_simplify_tolerance(mp) -> float | None:
@@ -421,8 +423,6 @@ def attach_admins_partitioned(
     lon_col: str = "lon",
     lat_col: str = "lat",
     point_id_col: str = "point_uid",
-    n_salts: int = 8,
-    refine: str = "arrow",
     simplify_tolerance: float | str | None = "auto",
 ) -> DataFrame:
     """Shuffle spatial join for polygon sets beyond broadcast budget —
@@ -434,21 +434,10 @@ def attach_admins_partitioned(
        broadcast-plans the cover when it fits, skew-splits hot city cells
        otherwise. Pairs are unique by construction (one cover res per
        admin), so no dedup shuffle.
-    2. **Exact refine** (G3), two backends:
-       - ``refine="arrow"`` (default): cogroup on (admin, salt) with the
-         vectorized numpy ray cast — each admin's WKB crosses the wire
-         exactly ``n_salts`` times, candidates of a giant polygon spread
-         across reducers by the deterministic uid-hash salt.
-       - ``refine="jvm"``: geometry travels as nested closed-edge arrays
-         and the even-odd ray cast runs as a Catalyst higher-order-
-         function predicate INSIDE the pair join (shuffled hash, no
-         sort; geometry.edge_polys_inside_sql — bit-identical to the
-         numpy kernel). No Arrow trip, no cogroup, no salting — but HOFs
-         are interpreted per element, and the r3 A/B at 36M points /
-         ~10^8 pairs measured 104 s vs arrow's 50.6 s (2×): Arrow's
-         serialization cost is smaller than numpy's vectorization win at
-         any realistic pair volume, so this backend is an option (and an
-         independent cross-check of the kernel), not the default.
+    2. **Exact refine** (G3): cogroup on (admin, salt) with the
+       vectorized numpy ray cast — each admin's WKB crosses the wire
+       exactly ``N_SALTS`` times, candidates of a giant polygon spread
+       across reducers by the deterministic uid-hash salt.
     3. **Replay** (G5): candidates gather per point (map-side partial
        collect_list) and the dedup/memo loop replays against the
        broadcast admin *skeleton* (id/zone_type/parent_id — no geometry),
@@ -462,8 +451,8 @@ def attach_admins_partitioned(
     Identical results to the broadcast path — gate `pip_admins_partitioned`
     is hash-checked against the same closed-form oracle.
 
-    ``simplify_tolerance`` (arrow backend): classify against Douglas–
-    Peucker-simplified rings, then exact-recheck ONLY points within the
+    ``simplify_tolerance``: classify against Douglas–Peucker-
+    simplified rings, then exact-recheck ONLY points within the
     tolerance band of the simplified boundary — exact by construction
     (the discarded vertices lie within tol of the retained chords), and
     measured 8.45× on ~2000-vertex boundaries (BENCH/BASELINE.md
@@ -473,7 +462,6 @@ def attach_admins_partitioned(
     untouched, so the toy-dim floor is unchanged. Pass a float to pin
     the tolerance, or None to force full-geometry classification.
     """.format(mv=AUTO_SIMPLIFY_MIN_VERTICES, k=AUTO_SIMPLIFY_EDGE_FACTOR)
-    from ..geometry import EDGE_POLYS_TYPE, edge_polys_inside_sql, mp_to_edge_polys
     from .skew import salted_mod_col
 
     spark = SparkSession.getActiveSession()
@@ -566,9 +554,6 @@ def attach_admins_partitioned(
     # The G2 envelope check runs HERE, JVM-side, before anything shuffles
     # or crosses Arrow — identical candidate set to the broadcast path's
     # _candidate_map (cell hit + bbox containment).
-    pair_cols = ["point_uid", "__plon", "__plat", "__aidx"]
-    if refine == "arrow":
-        pair_cols.append(salted_mod_col("point_uid", n_salts).alias("__salt"))
     cover_side = (
         F.broadcast(cover_idx)
         if n_cover <= COVER_BROADCAST_ROWS
@@ -580,121 +565,81 @@ def attach_admins_partitioned(
             (F.col("__plon") >= F.col("minx")) & (F.col("__plon") <= F.col("maxx"))
             & (F.col("__plat") >= F.col("miny")) & (F.col("__plat") <= F.col("maxy"))
         )
-        .select(*pair_cols)
+        .select(
+            "point_uid", "__plon", "__plat", "__aidx",
+            salted_mod_col("point_uid", N_SALTS).alias("__salt"),
+        )
     )
 
-    geom_base = (
+    # stage 2 — cogroup on (admin, salt): WKB × N_SALTS total, numpy
+    # vectorized ray cast (the 10^5+-vertex-polygon regime)
+    geom = (
         admins.select(F.col("id").alias("admin_id"), "boundary_wkb")
         .filter(F.col("boundary_wkb").isNotNull())
         .join(F.broadcast(_adm_idx_df()), "admin_id")
         .select("__aidx", "boundary_wkb")
+        .withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1))))
     )
 
-    if refine == "jvm":
-        # stage 2a — pure-Catalyst refine: geometry as closed-edge arrays,
-        # the ray cast as a HOF predicate inside the pair equi-join.
-        anc = frozenset(int(i) for i in ancestor_idx)
+    def arrow_refine(key, pairs_tbl, geom_tbl):
+        # applyInArrow (r6): lon/lat come out as zero-copy numpy and
+        # the kept uids leave via an Arrow take — the uid strings
+        # are never materialized as Python objects (the old pandas
+        # version paid object-column conversion for every pair row
+        # in both directions, guide §4.1/§4.2).
+        import pyarrow as pa
 
-        def to_edges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "__aidx": pdf["__aidx"],
-                        "__is_anc": [int(a) in anc for a in pdf["__aidx"]],
-                        "polys": [
-                            mp_to_edge_polys(wkb_to_mp(bytes(b)))
-                            for b in pdf["boundary_wkb"]
-                        ],
-                    }
-                )
-
-        geom_e = geom_base.mapInPandas(
-            to_edges, schema=f"__aidx int, __is_anc boolean, polys {EDGE_POLYS_TYPE}"
+        empty = pa.table(
+            {
+                "point_uid": pa.array([], type=pairs_tbl.schema.field("point_uid").type),
+                "cand": pa.array([], type=pa.int32()),
+            }
         )
-        # SHUFFLE_HASH: the pair side is huge and the join key (__aidx) is
-        # low-cardinality — a sort-merge join would SORT all pairs for no
-        # benefit; a shuffled hash join builds on the (small-per-partition)
-        # geometry side and streams pairs. AQE's skew split applies to SHJ.
-        flags = (
-            pairs.join(geom_e.hint("SHUFFLE_HASH"), "__aidx")
-            .withColumn(
-                "__in", F.expr(edge_polys_inside_sql("polys", "__plon", "__plat"))
-            )
-            # non-ancestors' contains=False rows are inert in the replay
-            .filter(F.col("__in") | F.col("__is_anc"))
-            .select(
-                "point_uid",
-                (F.col("__aidx") * 2 + F.col("__in").cast("int")).cast("int").alias("cand"),
-            )
-        )
-    elif refine == "arrow":
-        # stage 2b — cogroup on (admin, salt): WKB × n_salts total, numpy
-        # vectorized ray cast (the 10^5+-vertex-polygon regime)
-        geom = geom_base.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        )
+        if geom_tbl.num_rows == 0 or pairs_tbl.num_rows == 0:
+            return empty
+        aidx = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
+        mp = wkb_to_mp(bytes(geom_tbl.column("boundary_wkb")[0].as_py()))
+        # no bbox recheck: stage 1 already applied the identical
+        # envelope filter JVM-side (same mp_bbox values, carried on
+        # the cover), so every pair row here has passed it
+        lon = pairs_tbl.column("__plon").to_numpy(zero_copy_only=False)
+        lat = pairs_tbl.column("__plat").to_numpy(zero_copy_only=False)
+        uid_col = pairs_tbl.column("point_uid")
+        tol = simplify_tolerance
+        if tol == "auto":  # per-polygon: dense rings only (r04 #1)
+            tol = _auto_simplify_tolerance(mp)
+        if tol:
+            # simplified-refine with exact re-check band (VERDICT r03
+            # #8): classify on DP-simplified rings (cheap: E_s << E
+            # edges per point), then exact-test ONLY points within
+            # the DP tolerance of the simplified boundary — the only
+            # region where the two geometries can disagree. Result is
+            # EXACT; 1.5x band pads the DP bound for float slack.
+            from ..geometry import points_near_mp_boundary, simplify_mp
 
-        def arrow_refine(key, pairs_tbl, geom_tbl):
-            # applyInArrow (r6): lon/lat come out as zero-copy numpy and
-            # the kept uids leave via an Arrow take — the uid strings
-            # are never materialized as Python objects (the old pandas
-            # version paid object-column conversion for every pair row
-            # in both directions, guide §4.1/§4.2).
-            import pyarrow as pa
-
-            empty = pa.table(
-                {
-                    "point_uid": pa.array([], type=pairs_tbl.schema.field("point_uid").type),
-                    "cand": pa.array([], type=pa.int32()),
-                }
-            )
-            if geom_tbl.num_rows == 0 or pairs_tbl.num_rows == 0:
+            simp = simplify_mp(mp, tol)
+            inside = points_in_multipolygon(lon, lat, simp)
+            band = points_near_mp_boundary(lon, lat, simp, tol * 1.5)
+            if band.any():
+                inside[band] = points_in_multipolygon(lon[band], lat[band], mp)
+        else:
+            inside = points_in_multipolygon(lon, lat, mp)
+        if aidx not in bc_skel.value[1]:  # not an ancestor: False rows are inert
+            kept = np.nonzero(inside)[0]
+            if not len(kept):
                 return empty
-            aidx = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-            mp = wkb_to_mp(bytes(geom_tbl.column("boundary_wkb")[0].as_py()))
-            # no bbox recheck: stage 1 already applied the identical
-            # envelope filter JVM-side (same mp_bbox values, carried on
-            # the cover), so every pair row here has passed it
-            lon = pairs_tbl.column("__plon").to_numpy(zero_copy_only=False)
-            lat = pairs_tbl.column("__plat").to_numpy(zero_copy_only=False)
-            uid_col = pairs_tbl.column("point_uid")
-            tol = simplify_tolerance
-            if tol == "auto":  # per-polygon: dense rings only (r04 #1)
-                tol = _auto_simplify_tolerance(mp)
-            if tol:
-                # simplified-refine with exact re-check band (VERDICT r03
-                # #8): classify on DP-simplified rings (cheap: E_s << E
-                # edges per point), then exact-test ONLY points within
-                # the DP tolerance of the simplified boundary — the only
-                # region where the two geometries can disagree. Result is
-                # EXACT; 1.5x band pads the DP bound for float slack.
-                from ..geometry import points_near_mp_boundary, simplify_mp
+            uid_out = uid_col.take(pa.array(kept, pa.int64()))
+            cand = np.full(len(kept), aidx * 2 + 1, dtype=np.int32)
+        else:
+            uid_out = uid_col
+            cand = (aidx * 2 + inside.astype(np.int32)).astype(np.int32)
+        return pa.table({"point_uid": uid_out, "cand": pa.array(cand, pa.int32())})
 
-                simp = simplify_mp(mp, tol)
-                inside = points_in_multipolygon(lon, lat, simp)
-                band = points_near_mp_boundary(lon, lat, simp, tol * 1.5)
-                if band.any():
-                    inside[band] = points_in_multipolygon(lon[band], lat[band], mp)
-            else:
-                inside = points_in_multipolygon(lon, lat, mp)
-            if aidx not in bc_skel.value[1]:  # not an ancestor: False rows are inert
-                kept = np.nonzero(inside)[0]
-                if not len(kept):
-                    return empty
-                uid_out = uid_col.take(pa.array(kept, pa.int64()))
-                cand = np.full(len(kept), aidx * 2 + 1, dtype=np.int32)
-            else:
-                uid_out = uid_col
-                cand = (aidx * 2 + inside.astype(np.int32)).astype(np.int32)
-            return pa.table({"point_uid": uid_out, "cand": pa.array(cand, pa.int32())})
-
-        flags = (
-            pairs.groupBy("__aidx", "__salt")
-            .cogroup(geom.groupBy("__aidx", "__salt"))
-            .applyInArrow(arrow_refine, schema=f"point_uid {uid_dt}, cand int")
-        )
-    else:
-        raise ValueError(f"unknown refine {refine!r} (jvm|arrow)")
+    flags = (
+        pairs.groupBy("__aidx", "__salt")
+        .cogroup(geom.groupBy("__aidx", "__salt"))
+        .applyInArrow(arrow_refine, schema=f"point_uid {uid_dt}, cand int")
+    )
 
     # stage 3 — gather per point (map-side partial collect_list) + batch
     # replay + uid join-back. Two carry-the-payload-through-the-gather
@@ -792,7 +737,7 @@ def simplify_admin_boundaries(
 ) -> DataFrame:
     """Opt-in boundary simplification prep for the partitioned strategy:
     Douglas–Peucker per ring (geometry.simplify_mp) over the admin dim,
-    shrinking the WKB each polygon ships ``n_salts`` times through the
+    shrinking the WKB each polygon ships ``N_SALTS`` times through the
     refine (coastline-grade boundaries carry 10^5+ vertices; most
     attachment workloads tolerate a ~10-100 m boundary band). Adds
     ``n_vertices_before/after`` so the caller can log the reduction.
@@ -882,8 +827,6 @@ def attach_admins(
     lat_col: str = "lat",
     strategy: str = "broadcast",
     point_id_col: str = "point_uid",
-    n_salts: int = 8,
-    refine: str = "arrow",
     dim_path: str | None = None,
     simplify_tolerance: float | str | None = "auto",
     broadcast_budget_bytes: int = AUTO_BROADCAST_BUDGET_BYTES,
@@ -894,7 +837,7 @@ def attach_admins(
         return attach_admins_broadcast(points, admins, lon_col, lat_col, dim_path=dim_path)
     if strategy == "partitioned":
         return attach_admins_partitioned(
-            points, admins, lon_col, lat_col, point_id_col, n_salts=n_salts, refine=refine,
+            points, admins, lon_col, lat_col, point_id_col,
             simplify_tolerance=simplify_tolerance,
         )
     raise ValueError(f"unknown strategy {strategy!r}")

@@ -532,7 +532,7 @@ def semdedup(
     (dedup in streets — see operators/enrich.py W1); this is the
     embedding-space generalization a training-data pipeline needs.
     """
-    from .dedup import neardup_components
+    from .dedup import eager_checkpoint, neardup_components
     from .skew import ensure_parallelism
 
     threshold = round(1.0 - eps, 6)
@@ -545,9 +545,9 @@ def semdedup(
     # Cached: reused by the pair stage, the keep rank and the final
     # assignment; unpersisted below once the narrow projection is
     # checkpointed (ADVICE r05 #3 — the old cache was never released).
+    assigned, dim = _assign_clusters_kernel(corpus, codebook, id_col, vec_col)
     withc = (
-        _assign_clusters_kernel(corpus, codebook, id_col, vec_col)
-        .select(
+        assigned.select(
             F.col(id_col),
             F.col(vec_col),
             F.col("cluster"),
@@ -557,14 +557,14 @@ def semdedup(
         .cache()
     )
     pairs = _cluster_pair_cosines(
-        withc, threshold, id_col, vec_col, pair_tasks=pair_tasks
+        withc, dim, threshold, id_col, vec_col, pair_tasks=pair_tasks
     )
     comps = neardup_components(pairs, "vec_a", "vec_b").withColumnRenamed("doc_id", id_col)
     # components have converged (neardup_components returns materialized
     # labels): checkpoint the narrow (id, cluster, ccos) projection the
     # remaining plan needs and release the wide embedding cache — a
     # long-lived session no longer accumulates cached blocks per call.
-    narrow = withc.select(id_col, "cluster", "ccos").localCheckpoint(eager=True)
+    narrow = eager_checkpoint(withc.select(id_col, "cluster", "ccos"))
     withc.unpersist()
     w = Window.partitionBy("component").orderBy(F.col("ccos").asc(), F.col(id_col).asc())
     ranked = (
@@ -583,9 +583,20 @@ def semdedup(
     )
 
 
+def _require_width(widths: np.ndarray, dim: int) -> None:
+    """Every embedding must hold exactly ``dim`` values. A flat reshape
+    or stack over ragged rows would silently shift values between
+    vectors, so a ragged or null vector (width != dim) is an error."""
+    bad = int(np.count_nonzero(widths != dim))
+    if bad:
+        raise ValueError(
+            f"embeddings must have width {dim} (the codebook's): {bad} row(s) are ragged or null"
+        )
+
+
 def _assign_clusters_kernel(
     corpus: DataFrame, codebook: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """semdedup's nearest-centroid assignment as an Arrow kernel —
     (id, vec, cluster, ccos raw, __vnorm), the exact rows
     ``_nearest_clusters(..., 1, keep_score=True)`` produces, without
@@ -597,7 +608,7 @@ def _assign_clusters_kernel(
     (ccos desc, cluster asc) tie-break — including the all-NaN corner,
     where both pick the lowest cluster index. The codebook is collected
     once (it is driver-sized by definition — the same literals the
-    DuckDB oracle inlines)."""
+    DuckDB oracle inlines); its width is returned with the frame."""
     cb_rows = sorted(
         ((int(r["cluster"]), list(r["centroid"])) for r in codebook.collect()),
         key=lambda t: t[0],
@@ -622,6 +633,7 @@ def _assign_clusters_kernel(
             names = b.schema.names
             vcol = b.column(names.index(vec_col))
             off = vcol.offsets.to_numpy(zero_copy_only=False)
+            _require_width(np.diff(off), dim)  # null vectors have width 0
             flat = vcol.values.to_numpy(zero_copy_only=False)
             V = flat[off[0]:off[-1]].reshape(n, dim)
             vn_acc = np.zeros(n)
@@ -649,11 +661,12 @@ def _assign_clusters_kernel(
     return corpus.select(id_col, vec_col).mapInArrow(
         kernel,
         schema=f"{id_col} {id_dt}, {vec_col} {vec_dt}, cluster int, ccos double, __vnorm double",
-    )
+    ), dim
 
 
 def _cluster_pair_cosines(
     withc: DataFrame,
+    dim: int,
     threshold: float,
     id_col: str,
     vec_col: str,
@@ -684,7 +697,7 @@ def _cluster_pair_cosines(
     and each (cluster, task) group computes a deterministic round-robin
     slice of the block pairs — n_clusters × pair_tasks tasks instead of
     one task per cluster, with only the (tiny) per-cluster vectors
-    duplicated. Vectors must be fixed-width (every caller's are).
+    duplicated. Vectors must all have width ``dim`` (ValueError if not).
     Output: (vec_a, vec_b, cosine) with vec_a < vec_b, cosine rounded."""
     id_dt = withc.schema[id_col].dataType.simpleString()
     rep = withc.select("cluster", id_col, vec_col, "vnorm").withColumn(
@@ -708,9 +721,10 @@ def _cluster_pair_cosines(
         ids_raw = pdf[id_col].to_numpy()
         order = np.argsort(ids_raw, kind="stable")
         ids = ids_raw[order]
-        V = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64, copy=False)
+        vecs = pdf[vec_col].to_numpy()[order]
+        _require_width(np.array([-1 if v is None else len(v) for v in vecs]), dim)
+        V = np.stack(vecs).astype(np.float64, copy=False)
         nv = pdf["vnorm"].to_numpy()[order].astype(np.float64, copy=False)
-        dim = V.shape[1]
         n_blocks = (m + block - 1) // block
         out_a, out_b, out_c = [], [], []
         pair_idx = 0

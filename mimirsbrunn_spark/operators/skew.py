@@ -80,9 +80,7 @@ def salted_cell_col(
     return F.when(base.isin(hot_cells), fine).otherwise(base).alias("salted_cell")
 
 
-def ensure_parallelism(
-    df: DataFrame, target: int | None = None, severity: int = 4
-) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin rebalance of an under-parallel narrow lineage — the
     "one huge unsplittable file" defense (optimization guide §2.5: fix
     input skew "immediately after the read"; §2.6 idle capacity).
@@ -110,18 +108,16 @@ def ensure_parallelism(
     stages under the plan may be materialized, bounded by broadcast
     size).
 
-    ``severity``: only a SEVERE deficit fires the rebalance — fewer
-    planned partitions than target/severity (default: under a quarter
-    of the machine). The exchange has a fixed cost (stage barrier,
-    serialization, an AQE materialization point): an A/B on the
-    flagship corpus at sf0.1 (8 scan partitions on 32 cores) measured
-    the rebalance LOSING 0.4 s, while the 1-2-partition degenerate
-    scans it exists for win seconds. target/4 separates the two
-    regimes with margin on both sides.
+    Only a SEVERE deficit fires the rebalance — fewer planned partitions
+    than a quarter of the default parallelism. The exchange has a fixed
+    cost (stage barrier, serialization, an AQE materialization point):
+    an A/B on the flagship corpus at sf0.1 (8 scan partitions on 32
+    cores) measured the rebalance LOSING 0.4 s, while the 1-2-partition
+    degenerate scans it exists for win seconds. A quarter separates the
+    two regimes with margin on both sides.
     """
-    sc = df.sparkSession.sparkContext
-    n_target = target or sc.defaultParallelism
-    fire_below = max(2, n_target // max(severity, 1))
+    n_target = df.sparkSession.sparkContext.defaultParallelism
+    fire_below = max(2, n_target // 4)
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
         # a shuffle exchange anywhere in the lineage already re-spreads

@@ -17,6 +17,25 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _release_cached_blocks():
+    """Drop every cached/persisted DataFrame (e.g. the partitioned PIP's
+    cover, which stays persisted for the job's lifetime) when a test
+    module ends, so blocks do not pile up in the suite's one session JVM.
+    Never starts a session itself."""
+    yield
+    from py4j.protocol import Py4JError
+    from pyspark.sql import SparkSession
+
+    s = SparkSession.getActiveSession()
+    if s is None:
+        return
+    try:
+        s.catalog.clearCache()
+    except Py4JError:  # a dead JVM already fails the tests that used it
+        pass
+
+
 @pytest.fixture(scope="session")
 def fixtures_dir(tmp_path_factory, spark):
     from mimirsbrunn_spark.datagen import write_fixtures

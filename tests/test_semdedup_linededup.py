@@ -81,6 +81,50 @@ class TestSemDeDup:
         assert out[4]["keep"] is True and out[7]["keep"] is False
         assert out[4]["component"] == out[7]["component"] == 4
 
+    def test_reliable_checkpoint_when_dir_set(self, spark, tmp_path):
+        """With a checkpoint dir configured, SemDeDup's mid-plan
+        checkpoint must go to reliable storage (survives executor loss),
+        the same rule neardup_components follows — and give the same
+        answer as the localCheckpoint run."""
+        from mimirsbrunn_spark.operators.similarity import semdedup
+
+        cb = _codebook(spark, [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
+        rows = [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.02, 0.0]), (9, [0.0, 1.0, 0.0])]
+        want = sorted(semdedup(_vecs(spark, rows), cb, eps=0.01).collect())
+        ckpt = tmp_path / "ckpt"
+        sc = spark.sparkContext
+        assert sc.getCheckpointDir() is None
+        sc.setCheckpointDir(str(ckpt))
+        try:
+            got = sorted(semdedup(_vecs(spark, rows), cb, eps=0.01).collect())
+            written = [p for p in ckpt.rglob("*") if p.is_file()]
+            assert written, "checkpoint dir stayed empty — semdedup used localCheckpoint"
+            assert got == want
+        finally:
+            # the session is shared across the suite — don't leak the dir
+            # (the scala setter has a $-mangled name, hence getattr)
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+            assert sc.getCheckpointDir() is None
+
+    def test_ragged_embeddings_raise(self, spark):
+        """Widths dim+1 and dim-1 sum to 2*dim, so a flat reshape to
+        (2, dim) would succeed and silently shift a value from one vector
+        into the other. Both kernels must refuse the batch instead."""
+        from mimirsbrunn_spark.operators.similarity import _cluster_pair_cosines, semdedup
+
+        cb = _codebook(spark, [[1.0, 0.0, 0.0]])
+        rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [1.0, 0.0])]
+        # one partition behind an exchange: ensure_parallelism leaves it
+        # alone, so both vectors reach the assignment kernel in one batch
+        one_batch = _vecs(spark, rows).repartition(1)
+        with pytest.raises(Exception, match=r"ValueError.*width 3.*2 row"):
+            semdedup(one_batch, cb, eps=0.01).collect()
+        withc = _vecs(spark, rows).select(
+            F.lit(0).alias("cluster"), "vec_id", "embedding", F.lit(1.0).alias("vnorm")
+        )
+        with pytest.raises(Exception, match=r"ValueError.*width 3.*2 row"):
+            _cluster_pair_cosines(withc, 3, 0.99, "vec_id", "embedding").collect()
+
 
 class TestDedupLines:
     def _docs(self, spark, rows):

@@ -59,15 +59,12 @@ def test_partitioned_attach_still_matches_broadcast(spark, fixtures_dir):
     b = attach_admins(pts, admins, strategy="broadcast").select(
         "point_uid", F.to_json("admin_ids").alias("a")
     )
-    for refine in ("jvm", "arrow"):
-        p = attach_admins(pts, admins, strategy="partitioned", refine=refine).select(
-            "point_uid", F.to_json("admin_ids").alias("a")
-        )
-        mism = (
-            b.alias("b").join(p.alias("p"), "point_uid").filter(F.expr("b.a <> p.a")).count()
-        )
-        assert mism == 0, refine
-        assert b.count() == p.count(), refine
+    p = attach_admins(pts, admins, strategy="partitioned").select(
+        "point_uid", F.to_json("admin_ids").alias("a")
+    )
+    mism = b.alias("b").join(p.alias("p"), "point_uid").filter(F.expr("b.a <> p.a")).count()
+    assert mism == 0
+    assert b.count() == p.count()
 
 
 def test_places_view_visibility(spark):
